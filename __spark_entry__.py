@@ -68,9 +68,10 @@ R13_RED: list[str] = []
 # All five re-proved against the DuckDB oracle this round (PASS at
 # sf0.01 and sf0.1; at sf0.001 percentile_summary/mad_robust_spread
 # sit on a PRE-EXISTING Spark-vs-DuckDB half-cent rounding boundary —
-# the round-13 tree fails those two identically at that SF, and the
-# two strategies' raw doubles are bit-identical there, pinned by
-# tests/test_agg_and_functions.py::test_selection_strategies_bit_identical).
+# the round-13 tree fails those two identically at that SF; the
+# selection's raw doubles equal a sort-and-interpolate reference bit
+# for bit, pinned by
+# tests/test_agg_and_functions.py::test_selection_bit_identical_to_reference).
 CHANGED_THIS_ROUND: list[str] = [
     "percentile_summary",
     "mad_robust_spread",

@@ -23,26 +23,15 @@ SUMMARY_COLUMNS = [
     "average_total_profit",
 ]
 
-#: Selection strategy for exact_percentiles / mad_spread.
-#: "histogram" (default): one map-side histogram aggregate locates the
-#: rank-crossing buckets and only those are rescanned — the fact table
-#: is never shuffled (guide §2.3/§2.4).  "range": the round-2..13
-#: range-partitioned distributed selection (kept as the measured
-#: fallback and as the independent implementation the equivalence
-#: tests compare against).
-SELECTION_STRATEGY_CONF = "spark.graft.selection.strategy"
-
-#: Histogram resolution.  Correctness never depends on it (bucket
-#: assignment is a monotone function of the value, and rank extraction
-#: is exact either way); it trades histogram size (|groups| × buckets
-#: rows through one small shuffle) against rescan slice width
-#: (~n/buckets rows per crossing bucket, sorted on one window task).
-#: 4096 keeps the local histogram trivially small; at 100 TB size it
-#: like shuffle.partitions: pick buckets so n/buckets fits one task
-#: (e.g. 65536 puts a 1e12-row group's slice at ~15M rows).  Purely a
-#: balance knob — both extremes stay exact.
-HISTOGRAM_BUCKETS_CONF = "spark.graft.selection.histogramBuckets"
-HISTOGRAM_BUCKETS_DEFAULT = 4096
+#: Histogram resolution of exact_percentiles / mad_spread.  Correctness
+#: never depends on it (bucket assignment is a monotone function of the
+#: value, and rank extraction is exact either way); it trades histogram
+#: size (|groups| × buckets rows through one small shuffle) against
+#: rescan slice width (~n/buckets rows per crossing bucket, sorted on
+#: one window task).  4096 keeps the local histogram trivially small; at
+#: 100 TB pick it like shuffle.partitions, so n/buckets fits one task
+#: (e.g. 65536 puts a 1e12-row group's slice at ~15M rows).
+HISTOGRAM_BUCKETS = 4096
 
 
 def sales_summary(
@@ -80,7 +69,6 @@ def exact_percentiles(
     value_col: str,
     ps: list[float],
     aliases: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles (``percentile_cont`` semantics)
     per group — the scale-safe formulation.
@@ -88,38 +76,28 @@ def exact_percentiles(
     ``F.percentile``/``F.median`` buffer every group value in the agg
     state, and a ``Window.partitionBy(group)`` sort puts each group on
     ONE task — both die when a few groups hold a fact table's rows.
-    This operator instead computes a distributed selection:
+    This operator instead selects by histogram (`_histogram_percentiles`):
 
-    1. range-partition by (group, value) → every partition sort is
-       local, parallel, and spillable;
-    2. per-(partition, group) row counts → a P×G frame whose running
-       sum (a trivially small window) yields each partition's global
-       rank offset — no driver collect, offsets are broadcast-joined;
-    3. global rank = offset + local row_number (window keyed by
-       (partition, group): P×G-way parallelism);
-    4. each requested percentile p needs only ranks
-       ``lo = floor((n-1)p)+1`` and ``lo+1``; all other rows are
-       filtered before the final |groups|-row interpolation agg.
+    1. min/max/count per group — a map-side agg, one row per group
+       through the shuffle;
+    2. a per-(group, bucket) count histogram, bucket = monotone linear
+       index of the value inside the group's range, whose running sum
+       gives every bucket its rank offset;
+    3. each requested percentile p needs only ranks
+       ``lo = floor((n-1)p)+1`` and ``lo+1``; ONLY the buckets where
+       those cumulative ranks cross are rescanned and ranked, and only
+       the target rows reach the final |groups|-row interpolation agg.
+
+    The fact is scanned (projected to 2 columns) but never shuffled:
+    the largest exchange carries |groups| × `HISTOGRAM_BUCKETS` rows.
+    Single-valued buckets (all-tie mass, integer-valued columns)
+    resolve straight from the histogram with NO rescan, so mega-ties
+    get cheaper, not slower.
 
     Exactly matches ``percentile_cont``: v_lo*(1-frac) + v_hi*frac with
-    h = (n-1)p.  Ties are safe — equal ranks carry equal values.
-
-    Two strategies (``spark.graft.selection.strategy``):
-
-    - ``histogram`` (default, round 14): min/max/count per group (a
-      map-side agg), then a per-(group, bucket) count histogram —
-      bucket = monotone linear index of the value inside the group's
-      range — then ONLY the buckets where a target rank's cumulative
-      count crosses are rescanned and ranked.  The fact is scanned
-      (projected to 2 columns) but never shuffled: the largest
-      exchange carries |groups| × buckets rows.  Single-valued
-      buckets (all-tie mass, integer-valued columns) resolve straight
-      from the histogram with NO rescan, so mega-ties — the one input
-      the range strategy cannot spread — get cheaper, not slower.
-    - ``range``: the round-2..13 range-partitioned distributed
-      selection below (shuffles the projected fact once); kept as the
-      measured fallback and the independent equivalence witness.
-      ``num_partitions`` only applies here."""
+    h = (n-1)p.  Ties are safe — equal ranks carry equal values.  NULLs
+    neither rank nor count; NaN ranks last and ±inf at the ends, as in
+    Spark's ordering."""
     if aliases is None:
         # g-format, dot→underscore: 0.29→p29 (int() would truncate the
         # float error to p28), 0.995→p99_5 (int() would collide with
@@ -127,12 +105,6 @@ def exact_percentiles(
         aliases = [f"p{p * 100:g}".replace(".", "_") for p in ps]
     if len(set(aliases)) != len(aliases):
         raise ValueError(f"duplicate percentile aliases: {aliases}")
-    strategy = df.sparkSession.conf.get(
-        SELECTION_STRATEGY_CONF, "histogram"
-    )
-    if strategy == "range":
-        part = _ranked_partitions(df, group_cols, value_col, num_partitions)
-        return _selection_percentiles(part, group_cols, value_col, ps, aliases)
     w = df.select(*group_cols, value_col).filter(
         F.col(value_col).isNotNull()
     )
@@ -140,56 +112,6 @@ def exact_percentiles(
         w, group_cols, value_col, ps, aliases,
         _selection_stats(w, group_cols, value_col),
     )
-
-
-def _ranked_partitions(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    num_partitions: int | None,
-) -> DataFrame:
-    """Range-partition (group, value) and stamp partition ids.
-
-    Two plan branches (counts and ranks) consume the result, and rank
-    math requires BOTH to see identical range boundaries / _pid
-    assignments.  The range exchange samples its boundaries at run
-    time, so consistency needs the exchange to execute ONCE and be
-    shared:
-
-    - default (``spark.sql.exchange.reuse`` enabled — Spark's default,
-      and AQE's stage-level reuse behaves the same): leave the frame
-      LAZY.  Every consumer branch canonicalizes to the same exchange
-      subplan, Spark materializes that shuffle stage once per job, and
-      all branches read the same output — one job, no extra
-      materialization, boundaries sampled exactly once.  (Round-2 used
-      an eager localCheckpoint here instead; that is safe but splits
-      the query into several jobs that cannot share exchanges, which
-      benchmarked strictly slower.)
-    - fallback (reuse explicitly disabled): eager localCheckpoint pins
-      the materialized result, trading extra jobs for correctness.
-
-    Partition count: ``spark.sql.shuffle.partitions`` unless the caller
-    pins one — the session-level knob a cluster deployment already
-    sizes to its executor memory.  (Leaving the count unspecified for
-    AQE to size benchmarked slower here: the extra adaptive
-    re-planning stages outweigh any coalescing win for a selection
-    whose post-shuffle work is already rank-pruned.)"""
-    spark = df.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    g = [F.col(c) for c in group_cols]
-    v = F.col(value_col)
-    part = (
-        df.select(*group_cols, value_col)
-        # percentile_cont semantics: NULL values are not ranked
-        .filter(v.isNotNull())
-        .repartitionByRange(num_partitions, *g, v)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    if spark.conf.get("spark.sql.exchange.reuse", "true") == "false":
-        part = materialize(part)
-    return part
 
 
 def _ns_broadcast_join(
@@ -219,79 +141,6 @@ def _ns_broadcast_join(
         [F.col(c).eqNullSafe(F.col(tags[c])) for c in cols],
     )
     return left.join(F.broadcast(r), cond).drop(*tags.values())
-
-
-def _selection_percentiles(
-    part: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    ps: list[float],
-    aliases: list[str],
-) -> DataFrame:
-    """Distributed-selection percentile core over a `_ranked_partitions`
-    frame (steps 2-4 of the exact_percentiles docstring).
-
-    Partition pruning before ranking: the per-(partition, group) count
-    frame locates WHICH partitions hold each target rank, and only those
-    slices are ranked — the rank window (whose required hash exchange
-    Catalyst cannot elide, because a checkpointed frame's range
-    distribution is opaque to it) therefore shuffles ~|targets| × n/P
-    rows instead of n.  At 100 TB that is the difference between a
-    metadata-sized exchange and re-shuffling the fact table."""
-    v = F.col(value_col)
-    cnt = part.groupBy("_pid", *group_cols).agg(F.count("*").alias("_pc"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # P×G rows: per-partition exclusive rank offset + per-group total
-    off = cnt.select(
-        "_pid",
-        *group_cols,
-        F.col("_pc"),
-        F.coalesce(F.sum("_pc").over(w_off), F.lit(0)).alias("_off"),
-    )
-    n = cnt.groupBy(*group_cols).agg(F.sum("_pc").alias("_n"))
-
-    # Target ranks per (group, percentile): lo = floor((n-1)p)+1 and
-    # lo+1.  A (pid, group) slice is needed iff some target rank lies
-    # in (_off, _off + _pc] — evaluated inline on the P×G offset frame
-    # (one filter, no explode/distinct round-trips), with _n folded in
-    # so ONE broadcast serves the slice filter, the rank offsets, and
-    # the interpolation math.
-    offn = _ns_broadcast_join(off, n, group_cols)
-    hit = F.lit(False)
-    for p in ps:
-        h = (F.col("_n") - 1) * F.lit(float(p))
-        lo = F.floor(h) + 1
-        for r in (lo, lo + 1):
-            hit = hit | (
-                (r > F.col("_off")) & (r <= F.col("_off") + F.col("_pc"))
-            )
-    sel = offn.filter(hit).select("_pid", *group_cols, "_off", "_n")
-
-    w_local = Window.partitionBy("_pid", *group_cols).orderBy(v)
-    ranked = (
-        _ns_broadcast_join(part, sel, ["_pid", *group_cols])
-        .withColumn("_lrn", F.row_number().over(w_local))
-        .withColumn("_rn", F.col("_off") + F.col("_lrn"))
-    )
-
-    needed = F.lit(False)
-    contribs = []
-    for p, name in zip(ps, aliases):
-        h = (F.col("_n") - 1) * F.lit(float(p))
-        lo = F.floor(h) + 1
-        frac = h - F.floor(h)
-        needed = needed | (F.col("_rn") == lo) | (F.col("_rn") == lo + 1)
-        contrib = v.cast("double") * (
-            F.when(F.col("_rn") == lo, F.lit(1.0) - frac)
-            .when(F.col("_rn") == lo + 1, frac)
-            .otherwise(F.lit(0.0))
-        )
-        contribs.append(F.sum(contrib).alias(name))
-    return ranked.filter(needed).groupBy(*group_cols).agg(*contribs)
 
 
 def _selection_stats(
@@ -343,7 +192,7 @@ def _histogram_percentiles(
     - per-(group, bucket) count/min/max + a cumulative window over
       the |G|·NB-row histogram gives each bucket its exclusive rank
       offset ``_coff``; target ranks are lo = floor((n−1)p)+1 and
-      lo+1, exactly the range strategy's.
+      lo+1.
     - a crossing bucket with _bmin == _bmax (or NaN) holds one
       distinct value, so rank order inside it is irrelevant: its
       contribution is emitted straight from the histogram row.
@@ -351,12 +200,14 @@ def _histogram_percentiles(
       group + v BETWEEN _bmin AND _bmax (bucket value-ranges are
       disjoint per group, so this reproduces bucket membership
       exactly without re-deriving the bucket index), row_number
-      within the (group, bucket) slice + _coff = global rank, then
-      the SAME v·((1−frac)|frac) interpolation expression as the
-      range strategy.  Per (group, percentile) at most two nonzero
-      terms exist across both frames, and IEEE addition of two terms
-      is commutative, so the summed result is bit-identical to the
-      range strategy's.
+      within the (group, bucket) slice + _coff = global rank.
+    - a row adds v·(1−frac) for rank lo and v·frac for rank lo+1 —
+      the latter only when frac > 0 — and no term otherwise: a
+      zero-weight term would still be NaN for a NaN or ±inf value
+      and poison the sum.  Per (group, percentile) at most two terms
+      exist across both frames, and IEEE addition of two terms is
+      commutative, so the summed result is bit-identical to sorting
+      the group and computing v_lo·(1−frac) + v_hi·frac directly.
 
     The hot expressions are built as SQL strings through one
     ``F.expr`` each (double literals carry the ``D`` suffix — an
@@ -366,12 +217,7 @@ def _histogram_percentiles(
     round-trips per build (guide §1 / VERDICT r13 item 2), a fixed
     driver-side tax the string form removes without touching the
     plan."""
-    spark = w.sparkSession
-    nb = int(
-        spark.conf.get(
-            HISTOGRAM_BUCKETS_CONF, str(HISTOGRAM_BUCKETS_DEFAULT)
-        )
-    )
+    nb = HISTOGRAM_BUCKETS
     g = [f"`{c}`" for c in group_cols]
     gl = ", ".join(g)
     v = f"`{value_col}`"
@@ -411,9 +257,8 @@ def _histogram_percentiles(
         "AS _coff",
     )
 
-    # rank targets, verbatim from _selection_percentiles: lo and lo+1
-    # per requested p (lo+1 rides along even at frac==0, where its
-    # weight is 0.0 — keeping the selected-row set identical).
+    # rank targets: lo and lo+1 per requested p (lo+1 is selected even
+    # at frac==0, where the aggs below give it no term).
     # repr(float(p)) round-trips the exact IEEE double into the SQL
     # literal.
     def _targets(p: float) -> tuple[str, str, str]:
@@ -435,23 +280,27 @@ def _histogram_percentiles(
     # (NaN buckets are single-valued by construction — bucket nb is
     # NaN-only, and NaN == NaN is false, so they ride the isnan arm)
     degen = "(isnan(CAST(_bmin AS DOUBLE)) OR _bmin = _bmax)"
+    # terms only for filled ranks: a CASE with no ELSE yields NULL,
+    # which SUM skips
+    bv = "CAST(_bmin AS DOUBLE)"
     degen_aggs = []
     rescan_aggs = []
     for p, name in zip(ps, aliases):
         lo, hi, frac = _targets(p)
+        in_lo = _in_bucket(lo)
+        in_hi = f"({_in_bucket(hi)} AND {frac} > 0.0D)"
+        t_lo, t_hi = f"{bv} * (1.0D - {frac})", f"{bv} * {frac}"
         degen_aggs.append(
             F.expr(
-                f"SUM(CAST(_bmin AS DOUBLE) * (CASE WHEN "
-                f"{_in_bucket(lo)} THEN (1.0D - {frac}) ELSE 0.0D END)"
-                f" + CAST(_bmin AS DOUBLE) * (CASE WHEN "
-                f"{_in_bucket(hi)} THEN {frac} ELSE 0.0D END))"
+                f"SUM(CASE WHEN {in_lo} AND {in_hi} THEN {t_lo} + {t_hi} "
+                f"WHEN {in_lo} THEN {t_lo} WHEN {in_hi} THEN {t_hi} END)"
             ).alias(name)
         )
         rescan_aggs.append(
             F.expr(
-                f"SUM({vd} * (CASE WHEN _rn = {lo} THEN "
-                f"(1.0D - {frac}) WHEN _rn = {hi} THEN {frac} "
-                f"ELSE 0.0D END))"
+                f"SUM(CASE WHEN _rn = {lo} THEN {vd} * (1.0D - {frac}) "
+                f"WHEN _rn = {hi} AND {frac} > 0.0D THEN {vd} * {frac} "
+                f"END)"
             ).alias(name)
         )
     degen_part = (
@@ -492,8 +341,8 @@ def _histogram_percentiles(
     )
 
     # a group's two target rows can straddle the frames (rank lo in a
-    # single-valued bucket, lo+1 in a rescanned one); summing the
-    # per-frame partials adds at most one zero term per percentile
+    # single-valued bucket, lo+1 in a rescanned one); a frame holding
+    # neither rank of some p contributes a NULL partial, which SUM skips
     return (
         degen_part.unionByName(rescan_part)
         .groupBy(*group_cols)
@@ -507,47 +356,19 @@ def mad_spread(
     value_col: str,
     med_alias: str = "med",
     mad_alias: str = "mad",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Fused median + median-absolute-deviation per group.
 
     MAD is inherently two selection passes (deviations need the median
-    first).  Both ride the ``exact_percentiles`` strategy switch:
-
-    - ``histogram`` (default): pass 1 is the histogram selection; pass
-      2 buckets the deviations with bounds DERIVED from pass 1's
-      stats + median (devs lie in [0, max(gmax−med, med−gmin)] — both
-      sides weakly monotone under IEEE rounding, and the bucket index
-      clamps, so even an ulp-loose bound stays exact), skipping the
-      deviation min/max scan entirely.  No pass shuffles the fact.
-    - ``range``: one lazy plan whose pass-1 range exchange is shared
-      (exchange reuse) by its count/rank branches, the broadcast-
-      median branch, and pass 2's input.  (Round-2 eagerly
-      checkpointed between passes; that split the query into jobs
-      that re-executed the pass-1 exchange and benchmarked ~35%
-      slower.)
+    first); both are the ``exact_percentiles`` histogram selection.
+    Pass 1 selects the median; pass 2 buckets the deviations with
+    bounds DERIVED from pass 1's stats + median (devs lie in
+    [0, max(gmax−med, med−gmin)] — both sides weakly monotone under
+    IEEE rounding, and the bucket index clamps, so even an ulp-loose
+    bound stays exact), skipping the deviation min/max scan entirely.
+    No pass shuffles the fact.
 
     Output: one row per group with ``med_alias``/``mad_alias``."""
-    strategy = df.sparkSession.conf.get(
-        SELECTION_STRATEGY_CONF, "histogram"
-    )
-    if strategy == "range":
-        part1 = _ranked_partitions(df, group_cols, value_col, num_partitions)
-        med = _selection_percentiles(
-            part1, group_cols, value_col, [0.5], [med_alias]
-        )
-        dev = (
-            _ns_broadcast_join(part1, med, group_cols)
-            .select(
-                *group_cols,
-                F.abs(F.col(value_col) - F.col(med_alias)).alias("_dev"),
-            )
-        )
-        part2 = _ranked_partitions(dev, group_cols, "_dev", num_partitions)
-        mad = _selection_percentiles(
-            part2, group_cols, "_dev", [0.5], [mad_alias]
-        )
-        return _ns_broadcast_join(med, mad, group_cols)
     w = df.select(*group_cols, value_col).filter(
         F.col(value_col).isNotNull()
     )
@@ -599,14 +420,14 @@ def global_cumsum(
     part = df.repartitionByRange(num_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # same branch-consistency requirement as exact_percentiles: the
-    # offset branch and the cumsum branch must agree on _pid (eager
-    # checkpoint, not persist — see exact_percentiles).  Round-13
-    # counterfactual: replacing this with the lazy shared-exchange
-    # trick _ranked_partitions uses measured STRICTLY SLOWER on every
-    # caller (peak_concurrent_sessions 1.8 s -> 2.1 s steady-state,
-    # same-session A/B) — unlike the percentile operator, whose input
-    # is a bare projected scan, global_cumsum's callers feed it
+    # the offset branch and the cumsum branch must agree on _pid, and
+    # the range exchange samples its boundaries at run time, so the
+    # exchange must execute ONCE for both (eager checkpoint, not
+    # persist: a persisted frame can be recomputed and re-sampled).
+    # Round-13 counterfactual: leaving the frame lazy so both branches
+    # share one exchange through spark.sql.exchange.reuse measured
+    # STRICTLY SLOWER on every caller (peak_concurrent_sessions
+    # 1.8 s -> 2.1 s steady-state, same-session A/B): the callers feed
     # already-windowed/sessionized frames, and the range exchange's
     # boundary-sampling pass re-executes that whole upstream a second
     # time when the frame is left lazy.  The checkpoint pays one

@@ -54,8 +54,9 @@ def skyline_2d(
         .repartitionByRange(num_partitions, x.desc(), y.desc())
         .withColumn("_pid", F.spark_partition_id())
     )
-    # _pid feeds a self-consistent window; one consumer only, but the
-    # exchange-reuse rule from exact_percentiles applies if reuse is off
+    # _pid feeds a self-consistent window; one consumer only, but with
+    # exchange reuse off a re-executed range exchange could re-sample
+    # its boundaries, so pin it (the global_cumsum rule)
     if spark.conf.get("spark.sql.exchange.reuse", "true") == "false":
         pts = materialize(pts)
 

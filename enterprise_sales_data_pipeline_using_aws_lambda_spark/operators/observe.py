@@ -36,18 +36,21 @@ def observed(
     return df.observe(obs, *metrics), obs
 
 
-def ingest_metrics(df: DataFrame, name: str = "ingest"):
-    """The pipeline's standard per-batch metric set: row count, null
-    keys, and approximate distinct keys (``approx_count_distinct`` —
-    exact DISTINCT is rejected by observe)."""
+def ingest_metrics(
+    df: DataFrame, name: str = "ingest"
+) -> tuple[DataFrame, Observation]:
+    """The per-batch metric set ``run_batch`` returns: ``rows``,
+    ``revenue`` (sum of ``TotalRevenue``) and ``approx_distinct_keys``.
+    DISTINCT aggregates are disallowed in observed metrics (they'd need
+    a second shuffle); the HLL sketch is the observe-compatible form."""
     from ..schema import SALES_KEY_COLUMN
 
     return observed(
         df,
         name,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.col(SALES_KEY_COLUMN).isNull().cast("long")
-        ).alias("n_null_keys"),
-        F.approx_count_distinct(SALES_KEY_COLUMN).alias("n_keys_approx"),
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("TotalRevenue").alias("revenue"),
+        F.approx_count_distinct(SALES_KEY_COLUMN, rsd=0.01).alias(
+            "approx_distinct_keys"
+        ),
     )

@@ -119,20 +119,9 @@ def run_batch_frame(
         # Observed metrics ride the lake write for free: `observe` attaches
         # accumulator-style aggregates to the existing job — no extra pass
         # over the data, unlike a separate .count()/.agg() action.
-        from .operators.observe import observed
+        from .operators.observe import ingest_metrics
 
-        valid, obs = observed(
-            valid,
-            f"ingest_{batch_id}",
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("TotalRevenue").alias("revenue"),
-            # DISTINCT aggregates are disallowed in observed metrics
-            # (they'd need a second shuffle); the HLL sketch is the
-            # observe-compatible form.
-            F.approx_count_distinct(SALES_KEY_COLUMN, rsd=0.01).alias(
-                "approx_distinct_keys"
-            ),
-        )
+        valid, obs = ingest_metrics(valid, f"ingest_{batch_id}")
         # One parse+validate pass: localCheckpoint the validated frame
         # (the observation fires on this job), then every sink below
         # reuses the pinned rows — previously the lake write, the sales

@@ -1503,7 +1503,7 @@ def percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the two rank-neighbor rows per requested p reach the
     interpolation agg.  The fact is scanned but NEVER shuffled — no
     per-group agg buffer, no single-task group sort, and the largest
-    exchange carries |groups| × histogramBuckets rows.  The one-pass
+    exchange carries |groups| × HISTOGRAM_BUCKETS rows.  The one-pass
     sketch alternative is ``approx_percentile_summary`` (t-digest,
     mergeable partials)."""
     from ..operators.agg import exact_percentiles

@@ -49,7 +49,7 @@ def test_sales_invariants_hold_on_fixture(sales_df):
 
 
 def test_exact_percentiles_matches_builtin(spark, sf_dir):
-    """Distributed-selection percentiles == F.percentile (exact
+    """Histogram-selection percentiles == F.percentile (exact
     percentile_cont) on real data, across interpolated and non-
     interpolated ranks."""
     from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.agg import (
@@ -65,7 +65,6 @@ def test_exact_percentiles_matches_builtin(spark, sf_dir):
             "l_extendedprice",
             [0.0, 0.25, 0.5, 0.9, 1.0],
             ["p0", "p25", "p50", "p90", "p100"],
-            num_partitions=7,
         ).collect()
     }
     want = {
@@ -128,15 +127,14 @@ def test_exact_percentiles_ignores_nulls(spark):
     )
     out = {
         r["g"]: r["p50"]
-        for r in exact_percentiles(df, ["g"], "v", [0.5], ["p50"],
-                                   num_partitions=3).collect()
+        for r in exact_percentiles(df, ["g"], "v", [0.5], ["p50"]).collect()
     }
     assert out == {"a": 2.0, "b": 10.0}
 
 
 def test_exact_percentiles_property_random(spark):
     """Property check on adversarial-ish random data (ties, skewed
-    groups, negative values): distributed selection == F.percentile for
+    groups, negative values): histogram selection == F.percentile for
     every group and every p."""
     import random
 
@@ -159,8 +157,7 @@ def test_exact_percentiles_property_random(spark):
     names = [f"q{i}" for i in range(len(ps))]
     got = {
         r["g"]: r
-        for r in exact_percentiles(df, ["g"], "v", ps, names,
-                                   num_partitions=5).collect()
+        for r in exact_percentiles(df, ["g"], "v", ps, names).collect()
     }
     want = {
         r["g"]: r
@@ -293,15 +290,34 @@ def test_mad_spread_matches_naive(spark):
         assert got[g] == (med, mad), (g, got[g], (med, mad))
 
 
-def test_selection_strategies_bit_identical(spark):
-    """The round-14 histogram selection must return BIT-identical
-    doubles to the round-2..13 range selection (same interpolation
-    expression, ≤2 nonzero terms per percentile, commutative adds) on
-    adversarial data: mega-ties (single-valued buckets resolve from
-    the histogram without rescan), all-equal groups (span 0 → one
-    bucket), single-row groups, negatives, and skewed cardinalities.
-    mad_spread additionally exercises the derived-bounds pass-2
-    bucketing."""
+def _reference_percentile(vals, p):
+    """percentile_cont by hand: sort (NaN last, as Spark orders it),
+    h = (n-1)p, then s[lo]*(1-frac) + s[lo+1]*frac — the lo+1 term
+    only when frac > 0, so a p that lands exactly on a rank never
+    reads its neighbor."""
+    import math
+
+    s = sorted(vals, key=lambda v: (math.isnan(v), v))
+    h = (len(s) - 1) * p
+    lo = math.floor(h)
+    frac = h - lo
+    out = s[lo] * (1.0 - frac)
+    if frac > 0:
+        out += s[lo + 1] * frac
+    return out
+
+
+def test_selection_bit_identical_to_reference(spark):
+    """exact_percentiles and mad_spread return BIT-identical doubles to
+    a sort-and-interpolate reference on adversarial data: mega-ties
+    (single-valued buckets resolve from the histogram without rescan),
+    all-equal groups (span 0 → one bucket), single-row groups,
+    negatives, skewed cardinalities, and NaN (ordered last) and ±inf,
+    which must reach only the percentiles whose ranks they fill — a
+    row selected for one p must not add a NaN (inf × 0) term to
+    another p's sum.  mad_spread additionally exercises the
+    derived-bounds pass-2 bucketing."""
+    import math
     import random
 
     from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.agg import (
@@ -310,45 +326,44 @@ def test_selection_strategies_bit_identical(spark):
     )
 
     rng = random.Random(14)
-    rows = []
-    for g, n in [("big", 500), ("tie", 200), ("flat", 7), ("one", 1)]:
-        if g == "flat":
-            vals = [42.5] * n
-        elif g == "tie":
-            vals = [-3.0] * 150 + [rng.uniform(-1000, 1000) for _ in range(50)]
-        else:
-            vals = [round(rng.gauss(0, 1e6), 3) for _ in range(n)]
-        rows += [(g, v) for v in vals]
+    inf, nan = float("inf"), float("nan")
+    groups = {
+        "big": [round(rng.gauss(0, 1e6), 3) for _ in range(500)],
+        "tie": [-3.0] * 150 + [rng.uniform(-1000, 1000) for _ in range(50)],
+        "flat": [42.5] * 7,
+        "one": [round(rng.gauss(0, 1e6), 3)],
+        "nan": [1.0, 2.0, nan],
+        "pinf": [1.0, 2.0, 3.0, inf],
+        "ninf": [-inf, 5.0, 6.0, 7.0],
+        "both": [-inf, -2.0, 0.5, 4.0, inf, nan, nan],
+        "nan_ties": [3.0] * 5 + [nan] * 3,
+    }
+    rows = [(g, v) for g, vals in groups.items() for v in vals]
     df = spark.createDataFrame(rows, "g string, v double").repartition(9)
 
     ps = [0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0]
     names = [f"q{i}" for i in range(len(ps))]
+    pct = {
+        r["g"]: [r[n] for n in names]
+        for r in exact_percentiles(df, ["g"], "v", ps, names).collect()
+    }
+    mad = {
+        r["g"]: [r["med"], r["mad"]]
+        for r in mad_spread(df, ["g"], "v").collect()
+    }
+    assert set(pct) == set(mad) == set(groups)
 
-    def run(strategy):
-        spark.conf.set("spark.graft.selection.strategy", strategy)
-        try:
-            pct = {
-                r["g"]: tuple(r[n] for n in names)
-                for r in exact_percentiles(df, ["g"], "v", ps, names,
-                                           num_partitions=5).collect()
-            }
-            mad = {
-                r["g"]: (r["med"], r["mad"])
-                for r in mad_spread(df, ["g"], "v",
-                                    num_partitions=5).collect()
-            }
-        finally:
-            spark.conf.unset("spark.graft.selection.strategy")
-        return pct, mad
+    def same(a, b):
+        # exact equality, not approx: other doubles can flip the
+        # oracle's grid rounding; NaN equals NaN
+        return a == b or (math.isnan(a) and math.isnan(b))
 
-    pct_h, mad_h = run("histogram")
-    pct_r, mad_r = run("range")
-    assert set(pct_h) == set(pct_r) == {"big", "tie", "flat", "one"}
-    for g in pct_r:
-        # exact equality, not approx: both strategies must emit the
-        # same IEEE doubles or the oracle's grid rounding can flip
-        assert pct_h[g] == pct_r[g], (g, pct_h[g], pct_r[g])
-        assert mad_h[g] == mad_r[g], (g, mad_h[g], mad_r[g])
+    for g, vals in groups.items():
+        want = [_reference_percentile(vals, p) for p in ps]
+        assert all(map(same, pct[g], want)), (g, pct[g], want)
+        med = _reference_percentile(vals, 0.5)
+        want = [med, _reference_percentile([abs(v - med) for v in vals], 0.5)]
+        assert all(map(same, mad[g], want)), (g, mad[g], want)
 
 
 def test_sequence_packing_invariants(spark, sf_dir):

@@ -462,16 +462,20 @@ def test_observed_metrics_ride_the_write_job(spark, tmp_path):
     assert m["rows"] == 100
     assert m["null_amounts"] == 10
 
-    # the standard ingest set (uuid-keyed), incl. the
+    # the set run_batch returns (uuid-keyed), incl. the
     # approx_count_distinct workaround for observe's DISTINCT ban
-    df2 = df.withColumn("uuid", F.when(F.col("uuid") < 95, F.col("uuid")))
+    df2 = df.withColumn(
+        "uuid", F.when(F.col("uuid") < 95, F.col("uuid"))
+    ).withColumn("TotalRevenue", F.col("amount"))
     out2, obs2 = ingest_metrics(df2)
     out2.write.mode("overwrite").parquet(str(tmp_path / "t2"))
     m2 = obs2.get
-    assert m2["n_rows"] == 100
-    assert m2["n_null_keys"] == 5
-    # approx distinct of 95 true keys: rsd default 5%
-    assert abs(m2["n_keys_approx"] - 95) <= 10
+    assert m2["rows"] == 100
+    # sum of 1.5·id over the 90 ids not divisible by 10
+    assert m2["revenue"] == 1.5 * (sum(range(100)) - sum(range(0, 100, 10)))
+    # approx distinct of 95 true keys (NULL keys are not counted):
+    # rsd 1%, so 3 sigma is under 3
+    assert abs(m2["approx_distinct_keys"] - 95) <= 3
 
 
 def test_sales_feed_malformed_cells_null_out(spark, tmp_path):

@@ -32,7 +32,7 @@ ALLOWED_GLOBAL_WINDOWS = {
     # exact_percentiles with a single global group: Catalyst constant-
     # folds the literal group out of the cumulative window's
     # partitionBy, exposing the histogram frame — bounded by
-    # spark.graft.selection.histogramBuckets rows (+1 NaN bucket),
+    # operators.agg.HISTOGRAM_BUCKETS rows (+1 NaN bucket),
     # never fact-sized
     "conversion_latency_percentiles": (
         "histogram-bucket cumulative frame (exact_percentiles, "

@@ -189,7 +189,7 @@ def main() -> int:
         + " rows",
     )
 
-    # 8) Exact percentiles by distributed selection: 3 fact-sized groups
+    # 8) Exact percentiles by histogram selection: 3 fact-sized groups
     # (the shape that OOMs percentile agg buffers and serializes
     # group-partitioned window sorts).
     from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.agg import (
